@@ -31,6 +31,83 @@ import time
 SF1_HISTORY_FILE = "BENCH_SF1_HISTORY.json"
 
 
+#: Every suite bench.py times, in run order: "headline" first, then the
+#: sub-suites (each its own metric and steal stamp). The one source of
+#: the bench query lists — tools/dump_plans.py reads it too.
+SUITES: dict[str, list[str]] = {
+    # Headline set: the TPC-H-style analytics path + the heaviest
+    # pipeline operators (window, dedup, ANN). Keep stable across rounds
+    # so BENCH_r{N}.json is comparable.
+    "headline": [
+        "q1_pricing_summary",
+        "q3_shipping_priority",
+        "q5_local_supplier_volume",
+        "q6_forecast_revenue",
+        "q10_returned_items",
+        "q14_promo_revenue",
+        "q18_large_volume_customer",
+        "q19_discounted_revenue",
+        "q9_product_profit",
+        "q13_customer_distribution",
+        "q21_waiting_suppliers",
+        "w_topk_per_user",
+        "w_running_agg",
+        "g_rollup_orders",
+        "d_count_distinct",
+        "dd_exact_hash_groups",
+        "dd_lsh_candidates",
+        "dd_simhash_pairs",
+        "dd_embedding_neardup",
+        "sim_cosine_topk",
+        "txt_stats",
+        "st_tumbling_counts",
+    ],
+    # Write-path suite: the §2.8 lakehouse lifecycle queries. Scratch
+    # hygiene in queries/dml.py makes repeated runs safe (one root).
+    "dml": [
+        "dml_cow_delete",
+        "dml_mor_lifecycle",
+        "dml_merge_upsert",
+        "ddl_schema_evolution",
+    ],
+    # Spatial suite (added r6 as its own metric so the headline stays
+    # comparable across rounds): WKB kernels + the grid-bucketed join.
+    "spatial": [
+        "f_spatial_point",
+        "f_spatial_measures",
+        "j_spatial_bbox_join",
+        "j_polygon_point_exact",
+        "f_geojson_scan",
+        "f_spatial_relations",
+        "f_spatial_overlay",
+        "j_polygon_overlap_join",
+    ],
+    # Pipeline suite (added late r6): the round's new data-pipeline
+    # operators get their own trend line without touching the headline.
+    "pipeline": [
+        "dd_bloom_semi_join",
+        "ds_chunk_documents",
+        "dd_decontaminate",
+        "txt_gopher_quality",
+        "dd_url_canonical",
+        "st_stream_dedup",
+    ],
+    # TPC-DS/ClickBench-shape suite (added r7): the heaviest
+    # representatives of the new query packs, own metric so the
+    # headline stays round-comparable.
+    "tpcds": [
+        "dsq05_channel_rollup",
+        "dsq67_rollup_topk",
+        "dsq10_exists_chain",
+        "dsq93_net_after_returns",
+        "dsq74_two_metric_growth",
+        "dsq88_case_counts",
+        "cb_user_activity_topn",
+        "cb_regex_extract_quantiles",
+    ],
+}
+
+
 def _num(v) -> float | None:
     """Coerce a prior timing; junk (corrupted sidecar) -> None so a bad
     value is ignored per-query instead of crashing the sf1 section."""
@@ -262,80 +339,7 @@ def main() -> None:
     from pg_lake_spark.session import get_spark
     from pg_lake_spark.queries import QUERIES
 
-    # Headline set: the TPC-H-style analytics path + the heaviest
-    # pipeline operators (window, dedup, ANN). Keep stable across rounds
-    # so BENCH_r{N}.json is comparable.
-    headline = [
-        "q1_pricing_summary",
-        "q3_shipping_priority",
-        "q5_local_supplier_volume",
-        "q6_forecast_revenue",
-        "q10_returned_items",
-        "q14_promo_revenue",
-        "q18_large_volume_customer",
-        "q19_discounted_revenue",
-        "q9_product_profit",
-        "q13_customer_distribution",
-        "q21_waiting_suppliers",
-        "w_topk_per_user",
-        "w_running_agg",
-        "g_rollup_orders",
-        "d_count_distinct",
-        "dd_exact_hash_groups",
-        "dd_lsh_candidates",
-        "dd_simhash_pairs",
-        "dd_embedding_neardup",
-        "sim_cosine_topk",
-        "txt_stats",
-        "st_tumbling_counts",
-    ]
-
-    # Write-path suite: the §2.8 lakehouse lifecycle queries. Scratch
-    # hygiene in queries/dml.py makes repeated runs safe (one root).
-    dml_suite = [
-        "dml_cow_delete",
-        "dml_mor_lifecycle",
-        "dml_merge_upsert",
-        "ddl_schema_evolution",
-    ]
-
-    # Spatial suite (added r6 as its own metric so the headline stays
-    # comparable across rounds): WKB kernels + the grid-bucketed join.
-    spatial_suite = [
-        "f_spatial_point",
-        "f_spatial_measures",
-        "j_spatial_bbox_join",
-        "j_polygon_point_exact",
-        "f_geojson_scan",
-        "f_spatial_relations",
-        "f_spatial_overlay",
-        "j_polygon_overlap_join",
-    ]
-
-    # Pipeline suite (added late r6): the round's new data-pipeline
-    # operators get their own trend line without touching the headline.
-    pipeline_suite = [
-        "dd_bloom_semi_join",
-        "ds_chunk_documents",
-        "dd_decontaminate",
-        "txt_gopher_quality",
-        "dd_url_canonical",
-        "st_stream_dedup",
-    ]
-
-    # TPC-DS/ClickBench-shape suite (added r7): the heaviest
-    # representatives of the new query packs, own metric so the
-    # headline stays round-comparable.
-    tpcds_suite = [
-        "dsq05_channel_rollup",
-        "dsq67_rollup_topk",
-        "dsq10_exists_chain",
-        "dsq93_net_after_returns",
-        "dsq74_two_metric_growth",
-        "dsq88_case_counts",
-        "cb_user_activity_topn",
-        "cb_regex_extract_quantiles",
-    ]
+    headline = SUITES["headline"]
 
     repeats = int(os.environ.get("PG_LAKE_BENCH_REPEATS", "3"))
 
@@ -366,7 +370,7 @@ def main() -> None:
         warm_python_workers(spark)
     except Exception:
         pass
-    for name in headline + dml_suite + spatial_suite + pipeline_suite + tpcds_suite:
+    for name in [n for names in SUITES.values() for n in names]:
         if name in QUERIES:
             try:
                 QUERIES[name].fn(spark, warm_dir).count()
@@ -475,12 +479,7 @@ def main() -> None:
     # storm-hit ones. Same queries, same action, same repeats — only a
     # guarded second attempt keeping the better loop, the policy the
     # headline already has.
-    sub_suites = [
-        ("dml", dml_suite),
-        ("spatial", spatial_suite),
-        ("pipeline", pipeline_suite),
-        ("tpcds", tpcds_suite),
-    ]
+    sub_suites = [(label, names) for label, names in SUITES.items() if label != "headline"]
     sub_timings: dict[str, dict] = {}
     sub_totals: dict[str, float] = {}
     sub_stamps: dict[str, tuple[float, float]] = {}

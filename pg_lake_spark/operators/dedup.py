@@ -10,16 +10,67 @@ Design for scale (the whole point — see AGENTS brief):
 - Exact-Jaccard verification runs only on LSH candidates (tiny fraction
   of the cross product).
 
-MinHash here is the classic k-mins variant: h_i(doc) = min over shingles
-of md5(seed_i ‖ shingle). md5 is used because it is deterministic and
-identically available in Spark, DuckDB (oracle), and any other engine —
-signatures are portable across the lakehouse.
+MinHash here is the classic k-mins variant over two hash families:
+
+- ``minhash_signature``: h_i(doc) = min over shingles of md5(seed_i ‖
+  shingle). md5 is deterministic and identically available in Spark,
+  DuckDB (oracle), and any other engine — signatures are portable
+  across the lakehouse.
+- The LSH family (:data:`_MINHASH_FOLD`, :data:`_MINHASH_PRIME`,
+  :func:`_minhash_perm_sql`): each shingle's xxhash64 folded to 32
+  bits, then k affine permutations. Batch (``minhash_signature_agg``)
+  and streaming (``minhash_signature_fold``) signing both build their
+  terms from these definitions, so the two paths sign, bucket
+  (:func:`_band_bucket_sql`) and verify (:func:`verify_candidate_pairs`)
+  identically.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from pg_lake_spark.plans.broadcast import broadcast_if_small
+
+#: The LSH MinHash family: a shingle's xxhash64 is folded to 32 bits
+#: (``pmod(xxhash64(s), _MINHASH_FOLD)``), then permuted by
+#: h_i(x) = ((2i+1)·x + (7919i+1)) mod _MINHASH_PRIME.
+_MINHASH_FOLD = 4294967296
+#: Smallest prime > 2^32; a·x + b < 2^52 for every i used, so the
+#: permutations never overflow a bigint.
+_MINHASH_PRIME = 4294967311
+
+
+def _minhash_fold_sql(shingle: str) -> str:
+    """SQL: one shingle's 32-bit folded xxhash64 (the family's input)."""
+    return f"cast(pmod(xxhash64({shingle}), {_MINHASH_FOLD}) as bigint)"
+
+
+def _minhash_perm_sql(i: int, x: str) -> str:
+    """SQL: the i-th affine permutation of a folded shingle hash ``x``."""
+    return f"({2 * i + 1} * {x} + {7919 * i + 1}) % {_MINHASH_PRIME}"
+
+
+def _band_bucket_sql(band: int, rows_per_band: int, component: str) -> str:
+    """SQL: band ``band``'s LSH bucket as one bigint —
+    ``xxhash64(band, c_lo, …, c_hi)`` over that band's signature
+    components. ``component`` is a format string naming component
+    ``{i}`` (``"l._h{i}"`` for batch signature columns, ``"_sig[{i}]"``
+    for the streaming signature array); both are bigint, so a document
+    gets the same bucket on either path.
+
+    The one bucket key of batch banding, the batch first-match
+    predicate and streaming state. Hashing the band in makes a bucket
+    unique across bands, so streaming state needs no separate band key.
+    Equal components always hash equal, so every pair the banding
+    contract promises is found; a 64-bit collision can only ADD a
+    candidate, which the exact-Jaccard verify then scores truthfully.
+    """
+    cols = ", ".join(
+        component.format(i=i)
+        for i in range(band * rows_per_band, (band + 1) * rows_per_band)
+    )
+    return f"xxhash64({band}, {cols})"
 
 
 def _cap_buckets(
@@ -101,7 +152,7 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     longer docs). Output is identical (pinned by the oracle rows).
     """
     if isinstance(text, str):
-        return F.expr(f"array_distinct({_windows_expr(text, n)})")
+        return F.expr(_shingles_sql(text, n))
     words = F.split(text, r"\s+")
     k = F.size(words) - (n - 1)
     grams = F.transform(
@@ -109,6 +160,11 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
         lambda i: F.array_join(F.slice(words, i + 1, n), " "),
     )
     return F.array_distinct(grams)
+
+
+def _shingles_sql(text_col_name: str, n: int) -> str:
+    """SQL string of :func:`word_shingles` over a named column."""
+    return f"array_distinct({_windows_expr(text_col_name, n)})"
 
 
 def _windows_expr(text_col_name: str, n: int) -> str:
@@ -384,7 +440,9 @@ def minhash_signature(shingles: Column, num_hashes: int = 8) -> Column:
 
     Seeded family: h_i(s) = md5(concat('seed<i>:', s)); the minimum over
     the shingle set is order-invariant, so this is a pure expression —
-    no aggregation needed.
+    no aggregation needed. This is the DuckDB-computable family (the
+    oracle of ``dd_minhash_signatures`` recomputes it); LSH uses the
+    cheaper xxhash64 family below.
     """
     def hasher(seed: int):
         prefix = F.lit(f"seed{seed}:")
@@ -399,14 +457,17 @@ def minhash_signature(shingles: Column, num_hashes: int = 8) -> Column:
 def minhash_signature_agg(
     df: DataFrame, id_col: str, text_col: str, *, shingle_n: int = 3, num_hashes: int = 12
 ) -> DataFrame:
-    """MinHash signatures via explode + min-aggregate: (_id, _h0.._hk).
+    """LSH MinHash signatures via explode + min-aggregate: (_id, _h0.._hk).
 
-    Preferred over :func:`minhash_signature` inside larger pipelines:
-    the expression version duplicates the whole shingle subexpression
-    per hash after Catalyst's CollapseProject, which bloats codegen
-    (observed 60 s+ JIT on a 12-hash tree). Here each shingle is
-    hashed once per seed and min() combines map-side, so the shuffle
-    carries only num_hashes values per doc.
+    The batch spelling of the LSH family (``_minhash_fold_sql`` /
+    ``_minhash_perm_sql``); :func:`minhash_signature_fold` is the
+    streaming spelling and computes the same values. Batch keeps this
+    one because it is cheaper here: explode + groupBy measured 2.34 s
+    median process-tree CPU against 2.84 s for the fold (5,000 docs,
+    ``local[4]``, 10 alternating pairs, noop sink; the fold won 0 of
+    10, flat at 500 docs, outputs identical). Each shingle is hashed
+    once and min() combines map-side, so the shuffle carries only
+    num_hashes values per doc. NULL or shingle-less text yields no row.
     """
     base = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
     # The hash fan-out is CPU-bound; if the source has fewer input files
@@ -421,24 +482,43 @@ def minhash_signature_agg(
         base = base.repartition(par, "_id")
     ex = base.select("_id", F.explode(word_shingles("_t", shingle_n)).alias("_s"))
     # One xxhash64 per shingle (JVM-native, no string materialization —
-    # measured ~2x faster than the md5→hex→conv chain) folded to 32
-    # bits; the k-hash family is the standard linear-permutation trick
-    # h_i(x) = (a_i·h + b_i) mod p — k cheap codegen'd integer ops
-    # instead of k digests. Engine-portable md5 signatures remain
-    # available via minhash_signature() for oracle-checked surfaces.
+    # measured ~2x faster than the md5→hex→conv chain), then k cheap
+    # codegen'd integer permutations instead of k digests.
     # (An r8 A/B tried hashing the n word columns directly inside the
     # array transform to skip the join+distinct — 1.4x SLOWER: the
     # per-element lambda interprets n element_at calls and the lost
     # dedup inflates the explode; the string path stays.)
-    ex = ex.select("_id", F.expr("cast(pmod(xxhash64(_s), 4294967296) as bigint)").alias("_h"))
-    p = 4294967311  # smallest prime > 2^32; a·h+b < 2^52 — no overflow
+    ex = ex.select("_id", F.expr(_minhash_fold_sql("_s")).alias("_h"))
     # expr strings, not Column algebra — one py4j call per agg instead
     # of ~6 (see the expr-string note in simhash64_agg)
     aggs = [
-        F.expr(f"min(({2 * i + 1} * _h + {7919 * i + 1}) % {p})").alias(f"_h{i}")
+        F.expr(f"min({_minhash_perm_sql(i, '_h')})").alias(f"_h{i}")
         for i in range(num_hashes)
     ]
     return ex.groupBy("_id").agg(*aggs)
+
+
+def minhash_signature_fold(text_col: str, shingle_n: int, num_hashes: int) -> Column:
+    """LSH MinHash signature of a named text column as one map-only
+    expression: array<bigint> of ``num_hashes`` values, equal to
+    :func:`minhash_signature_agg`'s ``_h0.._hk`` for the same text.
+
+    The streaming spelling: with no aggregation it is the only one that
+    runs on an unbounded stream. Each shingle is hashed once and a
+    single ``aggregate`` fold carries the running elementwise minimum
+    of the k permutations (the per-hash ``array_min(transform(...))``
+    form re-hashed the shingle array once per hash, since higher-order
+    lambdas sit outside common-subexpression elimination: 5.2 s →
+    1.4 s over the sf0.1 corpus). Callers drop shingle-less text first
+    (the batch explode produces no row for it).
+    """
+    hashed = f"transform({_shingles_sql(text_col, shingle_n)}, s -> {_minhash_fold_sql('s')})"
+    init = ", ".join([str(_MINHASH_PRIME)] * num_hashes)
+    perms = ", ".join(_minhash_perm_sql(i, "h") for i in range(num_hashes))
+    return F.expr(
+        f"aggregate({hashed}, array({init}), "
+        f"(acc, h) -> zip_with(acc, array({perms}), (a, b) -> least(a, b)))"
+    )
 
 
 def _auto_est_gate(threshold: float, num_hashes: int, bands: int) -> float:
@@ -542,11 +622,16 @@ def lsh_candidate_pairs(
     (measured 111k → 14k candidates on the 5k-doc corpus, same final
     pairs — real near-dups sit at jaccard ≥ 0.8).
 
-    Pipeline: shingle → sign (map-only) → explode bands → self-join
-    inside (band, bucket) groups (shuffle #1, 8-byte bucket key) with
-    first-match dedup + estimate gate as in-join predicates → exact-
-    Jaccard verify on candidate docs only (shuffle #2, ids only) →
-    filter ≥ threshold.
+    Pipeline: shingle → sign (:func:`minhash_signature_agg`, the batch
+    spelling of the one LSH hash family) → explode bands → self-join
+    inside (band, bucket) groups (shuffle #1, the bigint
+    :func:`_band_bucket_sql` key) with first-match dedup + estimate gate
+    as in-join predicates → :func:`verify_candidate_pairs` (exact
+    Jaccard on candidate docs only, shuffle #2, ids only) → filter ≥
+    threshold. The streaming pipeline (``streaming/neardup.py``) signs
+    with the map-only fold spelling of the same family, buckets with
+    the same helper, applies the same gate and verifies through the
+    same function, so both emit the same pairs.
 
     Output: (id_a, id_b, jaccard) with id_a < id_b.
     """
@@ -570,14 +655,9 @@ def lsh_candidate_pairs(
         df, id_col, text_col, shingle_n=shingle_n, num_hashes=num_hashes
     ).localCheckpoint(eager=True)
 
-    # Bucket key = xxhash64 over the band's signature components — an
-    # 8-byte bigint shuffle key instead of the previous 32-char md5 hex
-    # string (¼ the key bytes through the banding exchange, and a far
-    # cheaper hash; r16, guide §2.3). Semantics: equal components
-    # always hash equal, so every pair the banding contract promises is
-    # still found; a 64-bit collision can only ADD a candidate, which
-    # the exact-Jaccard verify then scores truthfully — output pairs
-    # all satisfy jaccard ≥ threshold either way.
+    # Bucket key = _band_bucket_sql: an 8-byte bigint shuffle key (¼
+    # the key bytes of an md5 hex string through the banding exchange,
+    # and a far cheaper hash; r16, guide §2.3).
     #
     # The full signature rides along through the banding (12 bigints —
     # still tiny next to the text the signing stage dropped) so that
@@ -587,14 +667,9 @@ def lsh_candidate_pairs(
     # signature frame twice to compute the gate — three shuffles and a
     # barrier that this plan no longer contains. Same design as
     # simhash_pairs, which always carried its fingerprint words inline.
-    def _bucket_expr(b: int, prefix: str = "") -> str:
-        cols = ", ".join(
-            f"{prefix}_h{i}" for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-        )
-        return f"xxhash64({cols})"
-
     band_structs = ", ".join(
-        f"struct({b} as band, {_bucket_expr(b)} as bucket)" for b in range(bands)
+        f"struct({b} as band, {_band_bucket_sql(b, rows_per_band, '_h{i}')} as bucket)"
+        for b in range(bands)
     )
     banded = sigs.select(
         "_id",
@@ -625,47 +700,57 @@ def lsh_candidate_pairs(
         # co-occur in it, so the capped path keeps the distinct().
         for b in range(1, bands):
             earlier = " OR ".join(
-                f"({_bucket_expr(bp, 'l.')} = {_bucket_expr(bp, 'r.')})" for bp in range(b)
+                f"({_band_bucket_sql(bp, rows_per_band, 'l._h{i}')}"
+                f" = {_band_bucket_sql(bp, rows_per_band, 'r._h{i}')})"
+                for bp in range(b)
             )
             cond = cond & ~((F.col("l.band") == b) & F.expr(earlier))
 
     # Estimate gate (see docstring), applied inside the join output as
-    # a predicate over the carried components.
+    # a predicate over the carried components; a gate <= 0 is no gate.
     if est_gate == "auto":
         est_gate = _auto_est_gate(threshold, num_hashes, bands)
     cand = left.join(right, cond).select(
         F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"),
-        *(
-            [
-                F.expr(
-                    " + ".join(f"cast(l._h{i} = r._h{i} as int)" for i in range(num_hashes))
-                ).alias("__agree")
-            ]
-            if est_gate is not None and est_gate > 0
-            else []
-        ),
+        F.expr(
+            " + ".join(f"cast(l._h{i} = r._h{i} as int)" for i in range(num_hashes))
+        ).alias("__agree"),
     )
     if est_gate is not None and est_gate > 0:
-        cand = cand.filter(F.col("__agree") >= F.lit(est_gate * num_hashes)).select(
-            "id_a", "id_b"
-        )
+        cand = cand.filter(F.col("__agree") >= F.lit(est_gate * num_hashes))
+    cand = cand.select("id_a", "id_b")
     if capped:
         cand = cand.distinct()
-    # The (gated) pair set is referenced THREE times below (verify join
-    # plus both legs of cand_ids); candidate pairs are tiny relative to
-    # the corpus (2 ids/row), and relying on ReusedExchange to dedupe
-    # the banding stage is fragile across Spark versions — the exact
-    # failure mode behind r2's simhash 2.7× regression. An eager
-    # localCheckpoint materializes the bounded pair set once; blocks
-    # free when the result is dereferenced (no session-lifetime cache
-    # leak, unlike persist()).
+    # The (gated) pair set is referenced THREE times by the verify stage
+    # (verify join plus both legs of its candidate ids); candidate pairs
+    # are tiny relative to the corpus (2 ids/row), and relying on
+    # ReusedExchange to dedupe the banding stage is fragile across Spark
+    # versions — the exact failure mode behind r2's simhash 2.7×
+    # regression. An eager localCheckpoint materializes the bounded pair
+    # set once; blocks free when the result is dereferenced (no
+    # session-lifetime cache leak, unlike persist()).
     cand = cand.localCheckpoint(eager=True)
-    cand_ids = (
-        cand.select(F.col("id_a").alias("_id"))
-        .union(cand.select(F.col("id_b").alias("_id")))
-        .distinct()
+    return verify_candidate_pairs(
+        df, id_col, text_col, cand, shingle_n=shingle_n, threshold=threshold
     )
 
+
+def verify_candidate_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    cand: DataFrame,
+    *,
+    shingle_n: int,
+    threshold: float,
+) -> DataFrame:
+    """Exact-Jaccard verify of LSH candidate pairs ``cand`` (id_a, id_b):
+    the one verify stage of the batch (:func:`lsh_candidate_pairs`) and
+    streaming (``st_stream_lsh_neardup``) pipelines.
+
+    Returns (id_a, id_b, jaccard) for the pairs whose word-shingle
+    Jaccard over ``df``'s ``text_col`` is >= ``threshold``.
+    """
     # Shingle ONLY candidate docs (semi-join pushfilter): shingling is
     # an interpreted higher-order expression — the most expensive step
     # per row — so restricting it to candidates is the main saving at
@@ -675,9 +760,17 @@ def lsh_candidate_pairs(
     # legs reference it, and without the barrier each leg re-runs the
     # corpus scan + semi-join + shingling (A/B: 2.43 s → 1.94 s at
     # sf0.1).
-    # cand_ids scales with duplicate mass (unbounded at 100 TB) — no
-    # forced broadcast; AQE promotes the semi-join when it is small.
-    needed = df.join(cand_ids, df[id_col] == cand_ids["_id"], "left_semi")
+    # The candidate ids scale with duplicate mass (unbounded at 100 TB),
+    # so the semi-join is hinted only when Catalyst sizes them under the
+    # broadcast gate: a drained stream (memory-sink rows, KB estimates)
+    # is broadcast, a localCheckpoint (no row statistics, GB estimates)
+    # is left to AQE.
+    cand_ids = (
+        cand.select(F.col("id_a").alias(id_col))
+        .union(cand.select(F.col("id_b").alias(id_col)))
+        .distinct()
+    )
+    needed = df.join(broadcast_if_small(cand_ids), id_col, "left_semi")
     # Spread the shingling across all cores: the semi-join output
     # inherits the (AQE-coalesced, often tiny) join partitioning, which
     # serializes the interpreted transform lambda onto a few tasks —

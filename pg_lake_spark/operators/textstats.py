@@ -420,8 +420,11 @@ def unigram_surprisal(df, id_col: str, text_col: str):
     )
     base = df.select(F.col(id_col).alias("_id"), words.alias("_w"))
     # sum() over no rows is NULL — an empty corpus should return an
-    # empty frame, not crash building the literal below
-    total = base.agg(F.sum(F.size("_w"))).collect()[0][0] or 1
+    # empty frame, not crash building the literal below. NULL text adds
+    # 0: size(NULL) is NULL under ANSI but -1 under legacy.sizeOfNull.
+    total = base.agg(
+        F.sum(F.when(F.col("_w").isNotNull(), F.size("_w")))
+    ).collect()[0][0] or 1
     tok = base.select(
         "_id", F.size("_w").alias("_dl"), F.explode("_w").alias("_t")
     )

@@ -432,6 +432,12 @@ _CODE_CHANGES: list[tuple[str, int]] = [
     # into one conditional aggregation over a single fact join (the
     # dsq74 fold). toPandas-equal; strict-checked at 3 SFs.
     ("dsq78_channel_fullouter_ratio", 17),
+    # r18: one MinHash-LSH core — bigint bucket keys hash the band in,
+    # and batch and streaming share one verify stage. Gated candidate
+    # sets exceptAll 0/0 at sf0.1; strict-checked at 3 SFs.
+    ("dd_lsh_candidates", 18),
+    ("dd_neardup_clusters", 18),
+    ("st_stream_lsh_neardup", 18),
 ]
 
 #: Effective manifest: explicit max-merge of the append-only pair list.

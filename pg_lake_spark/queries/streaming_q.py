@@ -267,19 +267,20 @@ def st_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY id_a, id_b
     """,
     doc="STREAMING MinHash-LSH near-dup: applyInPandasWithState keeps "
-    "per-(band,bucket) id lists and emits candidate pairs as docs "
-    "arrive; candidates are then exact-Jaccard verified batch-side. "
-    "Signatures are bit-identical to the batch pipeline, so the batch "
-    "query's oracle transfers.",
+    "per-bucket id and signature lists and emits gated candidate pairs "
+    "as docs arrive; candidates are then exact-Jaccard verified "
+    "batch-side by the batch pipeline's own verify stage. Signatures "
+    "and bucket keys are bit-identical to the batch pipeline, so the "
+    "batch query's oracle transfers. State layout: buckets "
+    "array<long>, ids array<array<long>>, sigs array<array<array<long>>> "
+    "(bigint bucket keys; checkpoints of the earlier string-keyed layout "
+    "are refused on resume with STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE "
+    "— restart such a stream with a fresh checkpointLocation).",
 )
 def st_stream_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from pg_lake_spark.operators.dedup import (
-        _auto_est_gate,
-        _jaccard_distinct,
-        word_shingles,
-    )
+    from pg_lake_spark.operators.dedup import _auto_est_gate, verify_candidate_pairs
     from pg_lake_spark.streaming.neardup import stream_lsh_candidates
 
     path = os.path.join(sf_dir, "documents.parquet")
@@ -316,38 +317,13 @@ def st_stream_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = run_available_now(
         pairs_stream, spark, output_mode="append", state_partitions=width
     ).distinct()
-    # exact-Jaccard verify (batch side, candidates only) — identical to
-    # the batch pipeline's verify stage
+    # exact-Jaccard verify (batch side, candidates only): the batch
+    # pipeline's own verify stage, whose broadcast gate hints this
+    # drained (KB-sized) candidate set
     docs = load_tables(spark, sf_dir)["documents"]
-    cand_ids = (
-        cand.select(F.col("id_a").alias("doc_id"))
-        .union(cand.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-    )
-    # Same verify discipline as the batch pipeline (lsh_candidate_pairs,
-    # whose oracle this row shares): spread the interpreted shingling
-    # across all cores (the semi-join output otherwise inherits a few
-    # AQE-coalesced partitions), and intersect 64-bit shingle HASHES
-    # instead of strings — array_distinct already ran on the strings,
-    # so hash-set semantics match string-set semantics (collision
-    # ~1e-16 per pair, the bound the certified batch row documents).
-    par = spark.sparkContext.defaultParallelism
-    shingled = (
-        docs.join(F.broadcast(cand_ids), "doc_id", "left_semi")
-        .repartition(par, "doc_id")
-        .select(F.col("doc_id"), word_shingles("text", 2).alias("_sh"))
-        .select("doc_id", F.expr("transform(_sh, s -> xxhash64(s))").alias("_sh"))
-        .localCheckpoint(eager=True)
-    )
-    a = shingled.select(F.col("doc_id").alias("id_a"), F.col("_sh").alias("sh_a"))
-    b = shingled.select(F.col("doc_id").alias("id_b"), F.col("_sh").alias("sh_b"))
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", _jaccard_distinct(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.3)
-        .orderBy("id_a", "id_b")
-    )
+    return verify_candidate_pairs(
+        docs, "doc_id", "text", cand, shingle_n=2, threshold=0.3
+    ).orderBy("id_a", "id_b")
 
 
 @query(

@@ -2,25 +2,28 @@
 
 The batch LSH pipeline (operators/dedup.lsh_candidate_pairs) buckets
 signatures with a groupBy — on a stream that becomes a KEYED STATEFUL
-operator: each (band, bucket) bucket remembers the doc ids it has seen
-and every arriving doc emits a candidate pair against each of them
+operator: each bucket remembers the doc ids (and signatures) it has
+seen and every arriving doc emits a candidate pair against each of them
 (``applyInPandasWithState`` — the engine's custom-stateful-operator
-surface, same as the running-totals query). Since r16 the operator is
-keyed on a coarse hash of the bucket (``state_groups`` groups), each
-state row holding its buckets' id lists as a dict — per-bucket
-semantics unchanged, per-group fixed costs amortized
-(see _make_emit_pairs).
+surface, same as the running-totals query). The operator is keyed on a
+coarse group of buckets (``state_groups`` groups), each state row
+holding its buckets' member lists — per-bucket semantics unchanged,
+per-group fixed costs amortized (see _make_emit_pairs_gated).
 
-Signature parity is exact: :func:`streaming_band_keys` computes the
-SAME values as the batch ``minhash_signature_agg`` (xxhash64 folded to
-32 bits, linear-permutation family (2i+1)·h + (7919i+1) mod p) but as
-a pure ``transform``/``array_min`` expression — map-only, so it runs
-on an unbounded stream with no aggregation state. Identical signatures
-→ identical buckets → the streaming candidates equal the batch
-candidates, and the batch query's exact-Jaccard oracle transfers.
+Every LSH decision is shared with batch through ``operators/dedup.py``:
+
+- one hash family: :func:`streaming_band_keys` signs with
+  ``minhash_signature_fold``, the map-only spelling of the family batch
+  signs with through ``minhash_signature_agg`` (explode + groupBy, which
+  cannot run on a stream; batch keeps it because it measured cheaper
+  there). The values are equal, so the candidate sets are equal and the
+  batch query's exact-Jaccard oracle transfers;
+- one bucket key: ``_band_bucket_sql``, a bigint per (band, bucket);
+- one estimate gate: ``_auto_est_gate`` and the same agreement count;
+- one verify stage: ``verify_candidate_pairs`` (st_stream_lsh_neardup).
 
 Scale: the banding shuffle is the same short-key exchange as batch;
-per-bucket state is the id list (bounded by bucket size — the same
+per-bucket state is the member list (bounded by bucket size — the same
 quantity the batch self-join materializes). State never expires here
 (dedup against ALL history is the point); production would add a
 TTL/timeout for bounded retention.
@@ -30,15 +33,25 @@ from __future__ import annotations
 
 from typing import Any, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from pg_lake_spark.operators.dedup import word_shingles
+from pg_lake_spark.operators.dedup import (
+    _auto_est_gate,
+    _band_bucket_sql,
+    minhash_signature_fold,
+    word_shingles,
+)
 
-_P = 4294967311  # smallest prime > 2^32 (matches minhash_signature_agg)
-_FOLD = 4294967296
+#: The one state layout of the LSH operator. Spark refuses to resume a
+#: checkpoint written with another layout
+#: (STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE).
+_STATE_SCHEMA = (
+    "buckets array<long>, ids array<array<long>>, sigs array<array<array<long>>>"
+)
 
 
 def streaming_band_keys(
@@ -49,13 +62,11 @@ def streaming_band_keys(
     shingle_n: int = 3,
     num_hashes: int = 12,
     bands: int = 4,
-    with_signature: bool = False,
 ) -> DataFrame:
-    """(_id, band, bucket) rows — expression-only (stream-safe) with
-    batch-identical signature values. ``with_signature`` adds the full
-    ``_sig`` array (num_hashes bigints) to every banded row — the
-    estimate gate's input (r17); off by default so non-gated callers
-    ship no extra bytes."""
+    """(_id, _sig, band, bucket) rows — expression-only (stream-safe).
+    ``_sig`` is the full signature (num_hashes bigints, equal to batch
+    ``minhash_signature_agg``'s _h0.._hk), the estimate gate's input;
+    ``bucket`` is the band's bigint bucket key, equal to batch's."""
     if num_hashes % bands != 0:
         raise ValueError(
             f"num_hashes ({num_hashes}) must divide evenly into bands "
@@ -64,162 +75,70 @@ def streaming_band_keys(
             "lsh_candidate_pairs, which also refuses)"
         )
     rows_per_band = num_hashes // bands
-    shingles = word_shingles(text_col, shingle_n)
     # Batch parity for degenerate docs: minhash_signature_agg EXPLODES
     # the shingle array, so NULL/too-short text contributes no rows.
     # Unfiltered here, every such doc would get an all-NULL signature
-    # and concat_ws (which SKIPS nulls) would funnel them all into one
-    # md5('') mega-bucket per band — O(n²) spurious pairs and unbounded
-    # state growth for null-text corpora.
-    df = df.where(F.size(shingles) > 0)
-
-    # Signature as ONE fold (r16 opt, guide §4.1): the previous spelling
-    # — num_hashes separate array_min(transform(shingles, hash_i)) trees
-    # — re-built the shingle array and re-ran xxhash64 over it once PER
-    # HASH after CollapseProject inlined the shared subexpression
-    # (higher-order lambdas are CodegenFallback: interpreted and outside
-    # common-subexpression elimination). Here each shingle is hashed
-    # once, and a single aggregate() fold carries the running
-    # elementwise minimum of the k affine permutations. Identical
-    # values by construction: exact integer arithmetic, and min is
-    # order-insensitive (measured 5.2s -> 1.4s over the sf0.1 corpus,
-    # exceptAll-equal both ways).
-    hashed = F.transform(
-        shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_FOLD)).cast("bigint")
+    # and funnel into one mega-bucket per band — O(n²) spurious pairs
+    # and unbounded state growth for null-text corpora.
+    df = df.where(F.size(word_shingles(text_col, shingle_n)) > 0)
+    signed = df.select(
+        F.col(id_col).alias("_id"),
+        minhash_signature_fold(text_col, shingle_n, num_hashes).alias("_sig"),
     )
-    init = F.array(*[F.lit(_P).cast("bigint") for _ in range(num_hashes)])
-
-    def affines(h):
-        # the same linear-permutation family as minhash_signature_agg:
-        # h_i(x) = (2i+1)·x + (7919i+1) mod P
-        return F.array(
-            *[
-                (F.lit(2 * i + 1) * h + F.lit(7919 * i + 1)) % F.lit(_P)
-                for i in range(num_hashes)
-            ]
-        )
-
-    sig = F.aggregate(
-        hashed, init, lambda acc, h: F.zip_with(acc, affines(h), lambda a, b: F.least(a, b))
+    band_structs = ", ".join(
+        f"struct({b} as band, {_band_bucket_sql(b, rows_per_band, '_sig[{i}]')} as bucket)"
+        for b in range(bands)
     )
-    signed = df.select(F.col(id_col).alias("_id"), sig.alias("_sig"))
-    carry = ["_sig"] if with_signature else []
     return signed.select(
-        "_id",
-        *carry,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.element_at("_sig", i + 1).cast("string")
-                                    for i in range(
-                                        b * rows_per_band, (b + 1) * rows_per_band
-                                    )
-                                ],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("_id", *carry, "bb.band", "bb.bucket")
+        "_id", "_sig", F.expr(f"explode(array({band_structs}))").alias("bb")
+    ).select("_id", "_sig", "bb.band", "bb.bucket")
 
 
-def _make_emit_pairs(max_bucket_size: int | None):
-    """Pair emitter for a COARSE state group holding many (band,
-    bucket) buckets (r16 opt, guide §4.2): keying the stateful
-    operator on every individual bucket paid applyInPandasWithState's
-    per-group fixed cost (pandas frame build + state get/update)
-    ~20k times per micro-batch at sf0.1 — the dominant term of the
-    drain. One state row per coarse group instead holds a
-    bucket -> id-list dict (two parallel arrays in the state schema),
-    and the per-bucket semantics are evaluated row-by-row inside it,
-    unchanged: once a bucket has max_bucket_size members, later
-    arrivals neither emit pairs nor grow its state — the streaming
-    analogue of the batch _cap_buckets sub-sample (state stays
-    bounded; a degenerate mega-bucket of identical boilerplate cannot
-    make per-batch work quadratic). Identical documents are the
-    exact-dedup stage's job."""
+def _make_emit_pairs_gated(max_bucket_size: int | None, gate_thr: float | None):
+    """Pair emitter for a COARSE state group holding many buckets (r16
+    opt, guide §4.2): keying the stateful operator on every individual
+    bucket paid applyInPandasWithState's per-group fixed cost (pandas
+    frame build + state get/update) ~20k times per micro-batch at sf0.1
+    — the dominant term of the drain. One state row per coarse group
+    instead holds a bucket -> members map (parallel arrays in
+    ``_STATE_SCHEMA``: bucket keys, member ids, member signatures), and
+    the per-bucket semantics are evaluated row-by-row inside it: once a
+    bucket has max_bucket_size members, later arrivals neither emit
+    pairs nor grow its state — the streaming analogue of the batch
+    _cap_buckets sub-sample (state stays bounded; a degenerate
+    mega-bucket of identical boilerplate cannot make per-batch work
+    quadratic). Identical documents are the exact-dedup stage's job.
+
+    Estimate gate (r17, the batch est_gate ported): a candidate pair is
+    emitted only when the two signatures agree on at least ``gate_thr``
+    components — the SAME predicate the batch self-join applies inline
+    (``__agree >= est_gate*num_hashes``). Gated-out pairs never leave
+    the operator, so the downstream distinct(), the verify joins AND
+    the candidate-doc shingling all shrink by the gate's cut. Bucket
+    membership is unaffected by the gate (the batch gate likewise
+    filters join output, not bucket contents): cap and duplicate checks
+    run before it, and a gated-out arrival still joins its bucket. The
+    agreement test is vectorized — ONE numpy comparison per group and
+    micro-batch. ``gate_thr`` None skips it; the state layout is the
+    same either way, so a checkpoint can switch the gate on or off."""
 
     def _emit_pairs(
         key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        seen: dict[int, list[int]] = {}
+        sigs: dict[int, list] = {}
         if state.exists:
-            bks, idls = state.get
-            seen: dict[str, list[int]] = {b: list(l) for b, l in zip(bks, idls)}
-        else:
-            seen = {}
-        out_a: list[int] = []
-        out_b: list[int] = []
-        for pdf in pdfs:
-            for _id, bkey in zip(pdf["_id"], pdf["_bk"]):
-                s = seen.get(bkey)
-                if s is None:
-                    s = seen[bkey] = []
-                if max_bucket_size is not None and len(s) >= max_bucket_size:
-                    continue
-                _id = int(_id)
-                if _id in s:
-                    continue
-                for other in s:
-                    out_a.append(min(_id, other))
-                    out_b.append(max(_id, other))
-                s.append(_id)
-        state.update((list(seen.keys()), list(seen.values())))
-        if out_a:
-            yield pd.DataFrame({"id_a": out_a, "id_b": out_b})
-
-    return _emit_pairs
-
-
-def _make_emit_pairs_gated(
-    max_bucket_size: int | None, gate_thr: float
-):
-    """Gated pair emitter (r17, VERDICT r16 #1 — port the batch
-    est_gate to the streaming candidate set, guide §2.4/§4.2): state
-    additionally keeps each member's full MinHash signature, and a
-    candidate pair is emitted only when the two signatures agree on at
-    least ``gate_thr`` components — the SAME predicate the batch
-    self-join applies inline (``__agree >= est_gate*num_hashes``).
-    Gated-out pairs never leave the operator, so the downstream
-    distinct(), the verify joins AND the candidate-doc shingling (the
-    expensive interpreted step) all shrink by the gate's cut (~68% of
-    candidates on this corpus — the batch measurement).
-
-    Bucket-membership semantics are UNchanged from the ungated emitter
-    (the batch gate likewise filters join output, not bucket
-    contents): cap and duplicate checks run before the gate, and a
-    gated-out arrival still joins its bucket's member list. The
-    agreement test itself is vectorized — pair signatures accumulate
-    into two parallel lists and ONE numpy comparison per micro-batch
-    filters them (guide §4.2: batch the work, don't loop per row)."""
-    import numpy as np
-
-    def _emit_pairs(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            bks, idls, sgls = state.get
-            seen: dict[str, list[int]] = {}
-            sigs: dict[str, list] = {}
-            for b, l, sg in zip(bks, idls, sgls):
+            for b, l, sg in zip(*state.get):
                 seen[b] = list(l)
                 sigs[b] = list(sg)
-        else:
-            seen = {}
-            sigs = {}
         out_a: list[int] = []
         out_b: list[int] = []
         sig_l: list = []
         sig_r: list = []
         for pdf in pdfs:
-            for _id, bkey, sig in zip(pdf["_id"], pdf["_bk"], pdf["_sig"]):
+            for _id, bkey, sig in zip(
+                pdf["_id"].tolist(), pdf["_bk"].tolist(), pdf["_sig"]
+            ):
                 s = seen.get(bkey)
                 if s is None:
                     s = seen[bkey] = []
@@ -228,7 +147,6 @@ def _make_emit_pairs_gated(
                     sg = sigs[bkey]
                 if max_bucket_size is not None and len(s) >= max_bucket_size:
                     continue
-                _id = int(_id)
                 if _id in s:
                     continue
                 sig = np.asarray(sig, dtype=np.int64)
@@ -241,25 +159,22 @@ def _make_emit_pairs_gated(
                 sg.append(sig)
         # state values must be pure-Python (the state round-trip
         # pickles them JVM-side; numpy scalars/arrays break the
-        # unpickler) — ndarray.tolist() yields builtin ints
+        # unpickler) — tolist() above and below yields builtin ints
         state.update(
             (
-                list(seen.keys()),
-                [[int(i) for i in l] for l in seen.values()],
+                list(seen),
+                list(seen.values()),
                 [[np.asarray(v).tolist() for v in sigs[b]] for b in seen],
             )
         )
         if out_a:
-            keep = (
-                np.vstack(sig_l) == np.vstack(sig_r)
-            ).sum(axis=1) >= gate_thr
-            if keep.any():
-                yield pd.DataFrame(
-                    {
-                        "id_a": np.asarray(out_a, dtype=np.int64)[keep],
-                        "id_b": np.asarray(out_b, dtype=np.int64)[keep],
-                    }
-                )
+            a = np.asarray(out_a, dtype=np.int64)
+            b = np.asarray(out_b, dtype=np.int64)
+            if gate_thr is not None:
+                keep = (np.vstack(sig_l) == np.vstack(sig_r)).sum(axis=1) >= gate_thr
+                a, b = a[keep], b[keep]
+            if len(a):
+                yield pd.DataFrame({"id_a": a, "id_b": b})
 
     return _emit_pairs
 
@@ -279,10 +194,10 @@ def stream_lsh_candidates(
     """Streaming candidate-pair DataFrame (id_a < id_b; a pair may
     surface from several bands — distinct() downstream, exactly like
     the batch pipeline's candidate stage). ``max_bucket_size`` bounds
-    each bucket's state and pair fan-out (see _make_emit_pairs).
+    each bucket's state and pair fan-out (see _make_emit_pairs_gated).
 
-    ``state_groups`` (r16 opt): the stateful operator is keyed on a
-    hash of (band, bucket) into this many coarse groups, not on each
+    ``state_groups`` (r16 opt): the stateful operator is keyed on the
+    bucket key modulo this many coarse groups, not on each
     bucket — per-group fixed cost amortizes across the ~hundreds of
     buckets a group holds, while each bucket's emit/cap semantics are
     preserved inside the group (measured drain 15.8s -> 2.8s at
@@ -305,14 +220,11 @@ def stream_lsh_candidates(
     contract and same ``"auto"`` derivation as the batch
     ``lsh_candidate_pairs`` (shared ``_auto_est_gate``), so the gated
     streaming candidate set equals the gated batch candidate set
-    exactly (signatures are bit-identical). Opt-in (default None =
-    emit every candidate, the prior behavior); when set, each banded
-    row carries the full signature into state (+num_hashes bigints
-    per member) and the gate runs vectorized inside the operator —
-    see _make_emit_pairs_gated."""
+    exactly (signatures are bit-identical). None or <= 0 emits every
+    candidate. Every banded row carries its signature into state
+    whether gated or not, so the state layout (``_STATE_SCHEMA``) does
+    not depend on the gate — see _make_emit_pairs_gated."""
     if est_gate == "auto":
-        from pg_lake_spark.operators.dedup import _auto_est_gate
-
         # "auto" needs the caller's exact-verify threshold to floor
         # against; this operator has none (it emits candidates), so the
         # banding S-curve midpoint itself is the floor — numerically
@@ -320,34 +232,27 @@ def stream_lsh_candidates(
         # which holds for every sensible banding (a threshold above the
         # midpoint means the banding is too loose for the query).
         est_gate = _auto_est_gate(0.0, num_hashes, bands)
+    if est_gate is not None and est_gate <= 0:
+        est_gate = None
     banded = streaming_band_keys(
         stream_df, id_col, text_col,
         shingle_n=shingle_n, num_hashes=num_hashes, bands=bands,
-        with_signature=est_gate is not None,
     )
-    # one string key per bucket: band is already baked into which md5
-    # the bucket came from, but two bands CAN collide on the same md5
-    # only via identical sub-signatures — keep the band prefix so the
-    # coarse dict key equals the old (band, bucket) group key exactly
-    sig_carry = ["_sig"] if est_gate is not None else []
+    # the bucket already hashes its band in, so it is the state key as
+    # is, and a plain modulus of it spreads buckets over the groups
     keyed = banded.select(
         "_id",
-        *sig_carry,
-        F.concat_ws("#", F.col("band").cast("string"), F.col("bucket")).alias("_bk"),
-    ).withColumn("_grp", F.pmod(F.xxhash64(F.col("_bk")), F.lit(state_groups)))
-    if est_gate is not None:
-        emit = _make_emit_pairs_gated(max_bucket_size, est_gate * num_hashes)
-        state_schema = (
-            "buckets array<string>, ids array<array<long>>, "
-            "sigs array<array<array<long>>>"
-        )
-    else:
-        emit = _make_emit_pairs(max_bucket_size)
-        state_schema = "buckets array<string>, ids array<array<long>>"
+        "_sig",
+        F.col("bucket").alias("_bk"),
+        F.pmod("bucket", F.lit(state_groups)).alias("_grp"),
+    )
+    emit = _make_emit_pairs_gated(
+        max_bucket_size, None if est_gate is None else est_gate * num_hashes
+    )
     return keyed.groupBy("_grp").applyInPandasWithState(
         emit,
         outputStructType="id_a long, id_b long",
-        stateStructType=state_schema,
+        stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

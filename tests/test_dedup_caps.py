@@ -8,6 +8,8 @@ normal-width buckets untouched.
 
 from __future__ import annotations
 
+import pytest
+
 from pg_lake_spark.operators.dedup import lsh_candidate_pairs, simhash_pairs
 
 
@@ -257,6 +259,26 @@ def test_unigram_surprisal_orders_rarity(spark):
            unigram_surprisal(df, "doc_id", "text").collect()}
     assert len(out) == 22 and all(v > 0 for v in out.values())
     assert out[2] > out[1]
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_unigram_surprisal_null_text_adds_nothing(spark, ansi):
+    """A NULL-text document changes no other document's surprisal,
+    whether size(NULL) is NULL (ANSI) or -1 (legacy.sizeOfNull)."""
+    from pg_lake_spark.operators.textstats import unigram_surprisal
+
+    rows = [(1, "the cat sat on the mat"), (2, "a dog ran"), (3, "the dog sat")]
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        def scores(rs):
+            df = spark.createDataFrame(rs, "doc_id bigint, text string")
+            return {r.doc_id: r.surprisal for r in
+                    unigram_surprisal(df, "doc_id", "text").collect()}
+
+        assert scores(rows + [(4, None)]) == scores(rows)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
 def test_connected_components_long_chain_converges(spark):

@@ -300,47 +300,84 @@ def test_lake_feed_reads_through_schema_eras(spark, tmp_path):
     assert rows == [(1, 10.0, "legacy"), (2, 20.0, "new")]
 
 
+def _bucket_candidates(banded, num_hashes=12, gate=None):
+    """Ground-truth candidate pairs of a static banded frame: the
+    in-bucket self-join, optionally filtered by the batch estimate-gate
+    predicate (signature agreement >= gate*num_hashes)."""
+    l, r = banded.alias("l"), banded.alias("r")
+    pairs = l.join(
+        r,
+        (F.col("l.band") == F.col("r.band"))
+        & (F.col("l.bucket") == F.col("r.bucket"))
+        & (F.col("l._id") < F.col("r._id")),
+    )
+    if gate is not None:
+        agree = sum(
+            F.when(
+                F.element_at("l._sig", i + 1) == F.element_at("r._sig", i + 1), 1
+            ).otherwise(0)
+            for i in range(num_hashes)
+        )
+        pairs = pairs.filter(agree >= F.lit(gate * num_hashes))
+    return set(
+        map(tuple, pairs.select(F.col("l._id"), F.col("r._id")).distinct().collect())
+    )
+
+
+def _split_documents(spark, src):
+    """Write the corpus documents as two parquet files under ``src``
+    (returned as pandas halves, the second not yet written)."""
+    docs = (
+        spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+        .select("doc_id", "text")
+        .toPandas()
+    )
+    src.mkdir()
+    half = len(docs) // 2
+    docs.iloc[:half].to_parquet(src / "part0.parquet")
+    return docs.iloc[:half], docs.iloc[half:]
+
+
+def _drain_to_parquet(pairs, out, chk):
+    q = (
+        pairs.writeStream.format("parquet")
+        .option("path", str(out))
+        .option("checkpointLocation", str(chk))
+        .trigger(availableNow=True)
+        .outputMode("append")
+        .start()
+    )
+    try:
+        assert q.awaitTermination(180), "stream did not drain within 180 s"
+    finally:
+        q.stop()
+
+
 def test_stream_lsh_candidates_equal_batch(spark, tmp_path):
     """The streaming banding+state pipeline emits exactly the batch
-    pipeline's candidate set (signature parity is bit-exact)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from pg_lake_spark.operators import dedup
+    pipeline's candidate set (signature parity is bit-exact); a gate
+    <= 0 is no gate, as in batch."""
     from pg_lake_spark.streaming.neardup import (
         stream_lsh_candidates,
         streaming_band_keys,
     )
-    from pg_lake_spark.streaming.windows import run_available_now
-    from tests.conftest import SF_DIR
 
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
     # batch candidates: self-join of the SAME band keys
-    banded = streaming_band_keys(docs, "doc_id", "text", shingle_n=2)
-    l, r = banded.alias("l"), banded.alias("r")
-    batch_cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l._id") < F.col("r._id")),
+    want = _bucket_candidates(streaming_band_keys(docs, "doc_id", "text", shingle_n=2))
+    assert want  # non-empty
+    for est_gate in (None, 0.0):
+        stream = spark.readStream.schema(docs.schema).parquet(
+            os.path.join(SF_DIR, "documents.[p]arquet")
         )
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-        .distinct()
-    )
-    schema = docs.schema
-    stream = spark.readStream.schema(schema).parquet(
-        os.path.join(SF_DIR, "documents.[p]arquet")
-    )
-    stream_cand = run_available_now(
-        stream_lsh_candidates(stream, "doc_id", "text", shingle_n=2),
-        spark,
-        output_mode="append",
-    ).distinct()
-    a = set(map(tuple, batch_cand.collect()))
-    b = set(map(tuple, stream_cand.collect()))
-    assert a == b and a  # identical and non-empty
+        got = run_available_now(
+            stream_lsh_candidates(
+                stream, "doc_id", "text", shingle_n=2, est_gate=est_gate
+            ),
+            spark,
+            output_mode="append",
+        ).distinct()
+        assert set(map(tuple, got.collect())) == want, est_gate
 
 
 def test_stream_lsh_gated_candidates_equal_batch_gate(spark, tmp_path):
@@ -349,55 +386,21 @@ def test_stream_lsh_gated_candidates_equal_batch_gate(spark, tmp_path):
     est_gate*num_hashes) keeps from the ungated candidate set — and the
     gate actually cuts candidates on this corpus (else the port is
     dead code)."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from pg_lake_spark.operators.dedup import _auto_est_gate
     from pg_lake_spark.streaming.neardup import (
         stream_lsh_candidates,
         streaming_band_keys,
     )
-    from pg_lake_spark.streaming.windows import run_available_now
-    from tests.conftest import SF_DIR
 
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    num_hashes = 12
-    gate = _auto_est_gate(0.3, num_hashes, 4)
+    gate = _auto_est_gate(0.3, 12, 4)
     # batch ground truth: ungated in-bucket self-join + the batch
     # agreement predicate over the SAME signatures
-    banded = streaming_band_keys(
-        docs, "doc_id", "text", shingle_n=2, with_signature=True
-    )
-    l, r = banded.alias("l"), banded.alias("r")
-    agree = sum(
-        F.when(
-            F.element_at("l._sig", i + 1) == F.element_at("r._sig", i + 1), 1
-        ).otherwise(0)
-        for i in range(num_hashes)
-    )
-    batch_all = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(
-            F.col("l._id").alias("id_a"),
-            F.col("r._id").alias("id_b"),
-            agree.alias("__agree"),
-        )
-    )
-    batch_gated = (
-        batch_all.filter(F.col("__agree") >= F.lit(gate * num_hashes))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    batch_ungated = batch_all.select("id_a", "id_b").distinct()
+    banded = streaming_band_keys(docs, "doc_id", "text", shingle_n=2)
+    want = _bucket_candidates(banded, gate=gate)
+    n_ungated = len(_bucket_candidates(banded))
 
-    schema = docs.schema
-    stream = spark.readStream.schema(schema).parquet(
+    stream = spark.readStream.schema(docs.schema).parquet(
         os.path.join(SF_DIR, "documents.[p]arquet")
     )
     stream_gated = run_available_now(
@@ -407,9 +410,7 @@ def test_stream_lsh_gated_candidates_equal_batch_gate(spark, tmp_path):
         spark,
         output_mode="append",
     ).distinct()
-    want = set(map(tuple, batch_gated.collect()))
     got = set(map(tuple, stream_gated.collect()))
-    n_ungated = batch_ungated.count()
     assert got == want and got
     assert len(want) < n_ungated  # the gate actually gates here
 
@@ -420,24 +421,12 @@ def test_stream_lsh_gated_state_restore_across_microbatches(spark, tmp_path):
     drains: two source files + maxFilesPerTrigger=1 force two
     micro-batches, and cross-batch near-dup pairs must still surface
     gated exactly like the single-batch run."""
-    import os
-
-    import pandas as pd
-
     from pg_lake_spark.operators.dedup import _auto_est_gate
     from pg_lake_spark.streaming.neardup import stream_lsh_candidates
-    from tests.conftest import SF_DIR
 
-    docs = (
-        spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-        .select("doc_id", "text")
-        .toPandas()
-    )
     src = tmp_path / "in"
-    src.mkdir()
-    half = len(docs) // 2
-    docs.iloc[:half].to_parquet(src / "part0.parquet")
-    docs.iloc[half:].to_parquet(src / "part1.parquet")
+    _, rest = _split_documents(spark, src)
+    rest.to_parquet(src / "part1.parquet")
     gate = _auto_est_gate(0.3, 12, 4)
 
     def run(one_file_per_batch: bool):
@@ -450,15 +439,7 @@ def test_stream_lsh_gated_state_restore_across_microbatches(spark, tmp_path):
         )
         out = tmp_path / ("out1" if one_file_per_batch else "outN")
         chk = tmp_path / ("chk1" if one_file_per_batch else "chkN")
-        q = (
-            pairs.writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(chk))
-            .trigger(availableNow=True)
-            .outputMode("append")
-            .start()
-        )
-        q.awaitTermination(180)
+        _drain_to_parquet(pairs, out, chk)
         return set(
             map(tuple, spark.read.parquet(str(out)).distinct().collect())
         )
@@ -468,70 +449,121 @@ def test_stream_lsh_gated_state_restore_across_microbatches(spark, tmp_path):
     assert multi == single and multi
 
 
+def test_stream_lsh_resume_ungated_checkpoint_gated(spark, tmp_path):
+    """The gate does not change the state layout: a checkpoint written
+    ungated resumes gated, and the resumed batch emits exactly the
+    gated pairs involving its new documents (members restored from the
+    ungated batch included)."""
+    from pg_lake_spark.operators.dedup import _auto_est_gate
+    from pg_lake_spark.streaming.neardup import (
+        stream_lsh_candidates,
+        streaming_band_keys,
+    )
+
+    src, out, chk = tmp_path / "in", tmp_path / "out", tmp_path / "chk"
+    first_docs, rest = _split_documents(spark, src)
+    gate = _auto_est_gate(0.3, 12, 4)
+
+    def run(est_gate):
+        stream = (
+            spark.readStream.schema("doc_id bigint, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
+        _drain_to_parquet(
+            stream_lsh_candidates(
+                stream, "doc_id", "text", shingle_n=2, est_gate=est_gate
+            ),
+            out,
+            chk,
+        )
+        return set(map(tuple, spark.read.parquet(str(out)).distinct().collect()))
+
+    first = run(None)
+    rest.to_parquet(src / "part1.parquet")
+    second = run(gate) - first
+
+    docs = spark.read.parquet(str(src))
+    banded = streaming_band_keys(docs, "doc_id", "text", shingle_n=2)
+    old_ids = set(first_docs["doc_id"].tolist())
+    assert first == {
+        p for p in _bucket_candidates(banded) if old_ids.issuperset(p)
+    } and first
+    want = {
+        p for p in _bucket_candidates(banded, gate=gate) if not old_ids.issuperset(p)
+    }
+    assert second == want and want
+
+
+def test_stream_lsh_refuses_old_state_layout(spark, tmp_path):
+    """A checkpoint written with the earlier state layout (md5-string
+    bucket keys, no signatures; same _grp key) is refused on resume with
+    Spark's state-schema error instead of being misread."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from pg_lake_spark.streaming.neardup import (
+        stream_lsh_candidates,
+        streaming_band_keys,
+    )
+
+    src, out, chk = tmp_path / "in", tmp_path / "out", tmp_path / "chk"
+    _, rest = _split_documents(spark, src)
+
+    def reader():
+        return spark.readStream.schema("doc_id bigint, text string").parquet(str(src))
+
+    def old_emit(key, pdfs, state):
+        buckets, ids = state.get if state.exists else ([], [])
+        for pdf in pdfs:
+            buckets = buckets + pdf["_bk"].tolist()
+            ids = ids + [[i] for i in pdf["_id"].tolist()]
+        state.update((buckets, ids))
+        return iter([])
+
+    bk = F.concat_ws(
+        "#", F.col("band").cast("string"), F.md5(F.col("bucket").cast("string"))
+    )
+    old = (
+        streaming_band_keys(reader(), "doc_id", "text", shingle_n=2)
+        .select("_id", bk.alias("_bk"))
+        .withColumn("_grp", F.pmod(F.xxhash64("_bk"), F.lit(256)))
+        .groupBy("_grp")
+        .applyInPandasWithState(
+            old_emit,
+            outputStructType="id_a long, id_b long",
+            stateStructType="buckets array<string>, ids array<array<long>>",
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    )
+    _drain_to_parquet(old, out, chk)
+    rest.to_parquet(src / "part1.parquet")
+    with pytest.raises(Exception, match="STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"):
+        _drain_to_parquet(
+            stream_lsh_candidates(reader(), "doc_id", "text", shingle_n=2), out, chk
+        )
+
+
 def test_streaming_band_keys_fold_equals_per_hash_spelling(spark):
-    """r16 differential pin: the single-fold signature (one xxhash64
-    pass + aggregate/zip_with running minimum) computes exactly the
-    rows of the original per-hash spelling — num_hashes separate
-    array_min(transform(shingles, h_i)) trees — which is respelled
-    inline here as the ground truth."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from pg_lake_spark.operators.dedup import word_shingles
-    from pg_lake_spark.streaming.neardup import _FOLD, _P, streaming_band_keys
-    from tests.conftest import SF_DIR
+    """The streaming map-only fold signature equals the batch per-hash
+    explode+min spelling (minhash_signature_agg's _h0.._h11) row for
+    row, and every band row carries the same signature."""
+    from pg_lake_spark.operators.dedup import minhash_signature_agg
+    from pg_lake_spark.streaming.neardup import streaming_band_keys
 
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    num_hashes, bands, shingle_n = 12, 4, 2
-    rows_per_band = num_hashes // bands
-
-    shingles = word_shingles("text", shingle_n)
-    base = docs.where(F.size(shingles) > 0)
-
-    def hasher(i):
-        return lambda s: (
-            F.lit(2 * i + 1) * F.pmod(F.xxhash64(s), F.lit(_FOLD)).cast("bigint")
-            + F.lit(7919 * i + 1)
-        ) % F.lit(_P)
-
-    sigs = [
-        F.array_min(F.transform(shingles, hasher(i))).alias(f"_h{i}")
-        for i in range(num_hashes)
-    ]
-    signed = base.select(F.col("doc_id").alias("_id"), *sigs)
-    old = signed.select(
-        "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    f"_h{i}"
-                                    for i in range(
-                                        b * rows_per_band, (b + 1) * rows_per_band
-                                    )
-                                ],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("_id", "bb.band", "bb.bucket")
-
-    new = streaming_band_keys(
-        docs, "doc_id", "text",
-        shingle_n=shingle_n, num_hashes=num_hashes, bands=bands,
-    )
-    assert old.exceptAll(new).count() == 0
-    assert new.exceptAll(old).count() == 0
-    assert new.count() > 0
+    num_hashes = 12
+    for shingle_n in (2, 3):
+        batch = minhash_signature_agg(
+            docs, "doc_id", "text", shingle_n=shingle_n, num_hashes=num_hashes
+        ).select("_id", F.array(*[f"_h{i}" for i in range(num_hashes)]).alias("_sig"))
+        stream = streaming_band_keys(
+            docs, "doc_id", "text",
+            shingle_n=shingle_n, num_hashes=num_hashes, bands=4,
+        ).select("_id", "_sig").distinct()
+        assert batch.exceptAll(stream).count() == 0, shingle_n
+        assert stream.exceptAll(batch).count() == 0, shingle_n
+        assert stream.count() > 0
 
 
 def test_stream_lsh_bucket_cap_bounds_pairs(spark, tmp_path):
