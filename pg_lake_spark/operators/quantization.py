@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pg_lake_spark.operators import local_frame
+
 
 def _kmeans_np(data, k: int, iters: int):
     """Deterministic Lloyd on a numpy matrix: Forgy init = first k rows
@@ -140,7 +142,8 @@ def _exact_rerank(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("cvec"),
     )
-    qvecs = spark.createDataFrame(
+    qvecs = local_frame(
+        spark,
         [(int(r.qid), [float(x) for x in r.vec]) for r in qrows],
         "query_id bigint, qvec array<double>",
     )

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pg_lake_spark.operators import local_frame
+
 
 def assign_shards(
     df: DataFrame,
@@ -93,9 +95,7 @@ def assign_shards(
         (int(pid), int(row_off[pid]), int(tok_off.get(pid, 0)))
         for pid in sorted(totals)
     ]
-    offsets = spark.createDataFrame(
-        off_rows, "__pid int, __row_off long, __tok_off long"
-    )
+    offsets = local_frame(spark, off_rows, "__pid int, __row_off long, __tok_off long")
 
     # pass 2: partition-local rank/cumsum (parallel window), plus the
     # broadcast offset → exact global index

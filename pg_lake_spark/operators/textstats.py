@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pg_lake_spark.operators import local_frame
+
 #: Tiny per-language stopword profiles for the n-gram/stopword
 #: language-ID heuristic. Deterministic and engine-portable — the same
 #: lists are inlined into the DuckDB oracle SQL.
@@ -321,7 +323,7 @@ def bm25_topk(
     all_terms = sorted({t for ts in queries.values() for t in ts})
     qrows = [(q, t) for q, ts in queries.items() for t in sorted(set(ts))]
     spark = df.sparkSession
-    qdf = spark.createDataFrame(qrows, "query_id string, term string")
+    qdf = local_frame(spark, qrows, "query_id string, term string")
 
     words = F.split(
         F.lower(F.regexp_replace(F.col(text_col), r"^\s+|\s+$", "")),
@@ -349,9 +351,7 @@ def bm25_topk(
         # 10k+ literals bloats the driver and serializes to every
         # task; a broadcast left-semi against a terms frame is the
         # same executor-side hash probe with an O(1)-size plan.
-        terms_df = spark.createDataFrame(
-            [(t,) for t in all_terms], "_t string"
-        )
+        terms_df = local_frame(spark, [(t,) for t in all_terms], "_t string")
         tok = tok.join(F.broadcast(terms_df), "_t", "left_semi")
     tf = tok.groupBy("_id", "_dl", "_t").agg(
         F.count(F.lit(1)).cast("double").alias("_tf")

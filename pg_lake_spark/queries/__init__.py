@@ -438,6 +438,24 @@ _CODE_CHANGES: list[tuple[str, int]] = [
     ("dd_lsh_candidates", 18),
     ("dd_neardup_clusters", 18),
     ("st_stream_lsh_neardup", 18),
+    # r19: block pairs from a per-row explode(sequence) instead of two
+    # broadcast joins against a driver-built list (no Python-RDD scan);
+    # pairs equal numpy all-pairs for 1/2/3/5 blocks.
+    ("dd_embedding_neardup", 19),
+    # r19: query/term relations built as Arrow LocalTableScans.
+    ("txt_bm25_topk", 19),
+    # r19: the fold keeps a NULL-keyed group's ship and return legs
+    # apart, as the oracle's full outer join does.
+    ("dsq78_channel_fullouter_ratio", 19),
+    # r19: sort before the Python kernel projection (spatial_q module
+    # docstring); f_geojson_scan sorts its bounded output in one
+    # partition.
+    ("f_spatial_point", 19),
+    ("f_spatial_measures", 19),
+    ("f_spatial_relations", 19),
+    ("f_spatial_overlay", 19),
+    ("f_geojson_scan", 19),
+    ("f_geodesic_sphere", 19),
 ]
 
 #: Effective manifest: explicit max-merge of the append-only pair list.

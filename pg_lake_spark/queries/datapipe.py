@@ -409,11 +409,7 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def txt_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
-    # Sort the corpus BEFORE the feature projection: with orderBy above
-    # it, the range-partitioner's boundary-sampling job executes the
-    # whole text-stats expression tree a second time per action
-    # (measured 1.60s -> 0.85s at sf0.1, rows byte-identical; the sort
-    # then shuffles only (doc_id, text) — r16 opt, guide §1.2/§2.3).
+    # sort before the projection: see the queries.spatial_q docstring
     return textstats.text_stats(t["documents"].orderBy("doc_id"), "doc_id", "text")
 
 

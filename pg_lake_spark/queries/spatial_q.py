@@ -8,6 +8,21 @@ computed SQL: every geometry here is built from integer-valued doubles,
 making pack→parse roundtrips exact and the oracle plain arithmetic —
 the WKB layout itself is pinned against golden byte vectors in
 ``tests/test_spatial.py``.
+
+Sort before the projection. A global sort above a projection makes the
+range partitioner's boundary-sampling job run that whole projection a
+second time per action — for the geometry kernels here, a second run
+of their Arrow Python UDFs. Every row whose order keys are input
+columns the projection passes through unchanged is therefore spelled
+``df.orderBy(key).select(<projection>)`` (here and ``datapipe.txt_stats``):
+the projection maps rows 1:1 and keeps partition order, so rows and
+their global order are identical and the projection runs once
+(``txt_stats`` 1.60 s → 0.85 s at sf0.1; ``f_spatial_relations`` Python
+worker CPU 1.30 s → 0.78 s per run at sf0.01 on 4 CPUs, measured with
+``tools/perf_probe.py``). ``f_geojson_scan``'s key only exists after
+``read_geojson``'s Python parse, so its bounded (≤ 400-row) output
+sorts inside one partition instead: no range partitioner, no sampling
+job. ``tests/test_plans.py`` guards every row of this shape.
 """
 
 from __future__ import annotations
@@ -64,6 +79,7 @@ def f_spatial_point(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("c_custkey") % 997).cast("double").alias("x"),
             ((F.col("c_custkey") * 7) % 997).cast("double").alias("y"),
         )
+        .orderBy("c_custkey")
     )
     pt = S.st_point("x", "y")
     # WKT roundtrip: format POINT(x y) from the integer coords, parse it
@@ -89,7 +105,7 @@ def f_spatial_point(spark: SparkSession, sf_dir: str) -> DataFrame:
         S.st_srid("pt").alias("srid"),
         S.st_x("wpt").alias("wx"),
         S.st_astext("pt").alias("wkt"),
-    ).orderBy("c_custkey")
+    )
 
 
 @query(
@@ -126,6 +142,7 @@ def f_spatial_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("c_nationkey") * 40).cast("double").alias("ax"),
             (F.col("c_nationkey") * 40).cast("double").alias("ay"),
         )
+        .orderBy("c_custkey")
     )
     g = c.select(
         "c_custkey",
@@ -152,7 +169,7 @@ def f_spatial_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
         "within",
         F.round(S.st_x("c"), 6).alias("cx"),
         F.round(S.st_y("c"), 6).alias("cy"),
-    ).orderBy("c_custkey")
+    )
 
 
 @query(
@@ -245,7 +262,7 @@ def f_geojson_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         S.st_y("geometry").alias("lat"),
         S.st_geometrytype("geometry").alias("gtype"),
         F.get_json_object("properties", "$.segment").alias("segment"),
-    ).orderBy("ck")
+    ).coalesce(1).sortWithinPartitions("ck")
 
 
 @query(
@@ -335,6 +352,7 @@ def f_spatial_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((F.col("c_custkey") % 5) * 2).cast("double").alias("x0"),
             ((F.col("c_custkey") % 7) * 2).cast("double").alias("y0"),
         )
+        .orderBy("c_custkey")
     )
 
     def num(c):
@@ -358,7 +376,7 @@ def f_spatial_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
         S.st_contains("sq", "pt").alias("contains"),
         S.st_covers("sq", "pt").alias("covers"),
         S.st_touches("sq", "pt").alias("touches"),
-    ).orderBy("c_custkey")
+    )
 
 
 @query(
@@ -390,6 +408,7 @@ def f_spatial_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
             (1 + F.col("c_custkey") % 4).cast("double").alias("dx"),
             (1 + (F.col("c_custkey") * 3) % 4).cast("double").alias("dy"),
         )
+        .orderBy("c_custkey")
     )
 
     def num(c):
@@ -415,7 +434,7 @@ def f_spatial_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
         S.st_area(S.st_intersection("a", "b")).alias("inter_area"),
         S.st_area(S.st_union("a", "b")).alias("union_area"),
         S.st_area(S.st_difference("a", "b")).alias("diff_area"),
-    ).orderBy("c_custkey")
+    )
 
 
 @query(
@@ -533,6 +552,7 @@ def f_geodesic_sphere(spark: SparkSession, sf_dir: str) -> DataFrame:
             (((F.col("c_custkey") * 13) % 360).cast("double") - 180.0).alias("x2"),
             (((F.col("c_custkey") * 29) % 120).cast("double") - 60.0).alias("y2"),
         )
+        .orderBy("c_custkey")
     )
     a = S.st_point("x1", "y1")
     b = S.st_point("x2", "y2")
@@ -540,7 +560,7 @@ def f_geodesic_sphere(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey",
         F.round(S.st_distance_sphere(a, b) / 1000.0, 3).alias("dist_km"),
         S.st_dwithin_sphere(a, b, 5_000_000).alias("nearby"),
-    ).orderBy("c_custkey")
+    )
 
 
 @query(
@@ -602,11 +622,6 @@ def f_geodesic_spheroid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("nd") == 2, F.round(raw / F.col("div"), 2))
         .otherwise(F.round(raw / F.col("div"), 3))
     )
-    # Sort the literal input rows BEFORE the transform projection:
-    # with orderBy above it, the range-partitioner's boundary-sampling
-    # job executes the (chained pandas-UDF) projection a second time
-    # per action (r16 opt, guide §1.2 double-execution; measure is
-    # unique, so the global order — and every row — is identical).
     return df.orderBy("measure").select("measure", val.alias("expected"))
 
 
@@ -681,11 +696,6 @@ def f_polar_stereographic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("kind") == "N", _r2z(S.st_y(fwd)))
         .otherwise(rt_err_mm)
     )
-    # Sort the literal input rows BEFORE the transform projection:
-    # with orderBy above it, the range-partitioner's boundary-sampling
-    # job executes the (chained pandas-UDF) projection a second time
-    # per action (r16 opt, guide §1.2 double-execution; measure is
-    # unique, so the global order — and every row — is identical).
     return df.orderBy("measure").select("measure", val.alias("expected"))
 
 
@@ -776,11 +786,6 @@ def f_krovak_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("kind") == "N", F.round(S.st_y(fwd_def), 2))
         .otherwise(rt_err_mm)
     )
-    # Sort the literal input rows BEFORE the transform projection:
-    # with orderBy above it, the range-partitioner's boundary-sampling
-    # job executes the (chained pandas-UDF) projection a second time
-    # per action (r16 opt, guide §1.2 double-execution; measure is
-    # unique, so the global order — and every row — is identical).
     return df.orderBy("measure").select("measure", val.alias("expected"))
 
 
@@ -1041,11 +1046,6 @@ def f_laea_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("kind") == "N", _r2z(S.st_y(fwd)))
         .otherwise(rt_err_mm)
     )
-    # Sort the literal input rows BEFORE the transform projection:
-    # with orderBy above it, the range-partitioner's boundary-sampling
-    # job executes the (chained pandas-UDF) projection a second time
-    # per action (r16 opt, guide §1.2 double-execution; measure is
-    # unique, so the global order — and every row — is identical).
     return df.orderBy("measure").select("measure", val.alias("expected"))
 
 
@@ -1094,7 +1094,6 @@ def f_merc_3395(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = spark.createDataFrame(rows, "city string, lon double, lat double")
     pt = S.st_point(F.col("lon"), F.col("lat"))
     fwd = S.st_transform(pt, 4326, 3395)
-    # sort-before-projection: see the f_*_transform tails (r16 opt)
     return df.orderBy("city").select(
         "city",
         _r2z(S.st_x(fwd)).alias("easting"),

@@ -1405,10 +1405,13 @@ def dsq78_channel_fullouter_ratio(spark: SparkSession, sf_dir: str) -> DataFrame
     # Local A/B is modest (dims broadcast at sf0.1: 1.46 → 1.33s) but
     # the plan drops one full fact join + the SMJ FullOuter — the terms
     # that dominate at scale.
-    agg = base.groupBy(
-        F.col("o_custkey").alias("custkey"),
-        F.year("l_shipdate").cast("int").alias("yr"),
-    ).agg(
+    # NULL keys never match in the outer join, so a NULL-keyed group's
+    # ship and return legs stay two rows there: ``leg`` splits them
+    # (NULL — one merged group — whenever both keys are present).
+    custkey = F.col("o_custkey")
+    yr = F.year("l_shipdate").cast("int")
+    leg = F.when(custkey.isNull() | yr.isNull(), F.col("l_returnflag") == "R")
+    agg = base.groupBy(custkey.alias("custkey"), yr.alias("yr"), leg.alias("leg")).agg(
         F.sum(F.when(F.col("l_returnflag") != "R", cents)).alias("s_cents"),
         F.sum(F.when(F.col("l_returnflag") == "R", cents)).alias("r_cents"),
     )

@@ -5,6 +5,12 @@ Vectorized SQL / Not Vectorized Constructs decoration."""
 
 from __future__ import annotations
 
+import os
+import re
+
+import pytest
+from pyspark.sql import functions as F
+
 from pg_lake_spark.plans import explain_report, plan_summary
 from pg_lake_spark.queries import QUERIES
 from tests.conftest import SF_DIR
@@ -623,3 +629,114 @@ def test_q18_single_aggregation_of_fact(spark):
     cust = next(sc for sc in s.scans if "c_name" in sc.read_schema)
     assert cust.read_schema.count(":") == 2
     assert set(s.interpreted_ops) <= {"TakeOrderedAndProject"}
+
+
+_PYTHON_EVAL = ("ArrowEvalPython", "BatchEvalPython")
+
+
+def _python_below_range_sort(plan: str) -> list[str]:
+    """Python-eval nodes inside the subtree of any rangepartitioning
+    exchange (a node's depth is the width of its tree-drawing prefix).
+    The range partitioner samples its child in a separate job, so each
+    such node runs twice per action."""
+    def depth(line: str) -> int:
+        return len(re.match(r"((?:[: ] {2})*)(?:[+:]- )?", line).group(0))
+
+    lines = plan.splitlines()
+    hits = []
+    for i, line in enumerate(lines):
+        if "Exchange rangepartitioning" not in line:
+            continue
+        for below in lines[i + 1 :]:
+            if depth(below) <= depth(line):
+                break
+            if any(op in below for op in _PYTHON_EVAL):
+                hits.append(below.strip())
+    return hits
+
+
+def _physical_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+#: Rows whose final sort keys pass through a Python-kernel (or, for
+#: txt_stats, a wide feature) projection unchanged: each sorts first and
+#: projects second (queries.spatial_q module docstring).
+SORT_BEFORE_PROJECTION = [
+    "f_spatial_point",
+    "f_spatial_measures",
+    "f_spatial_relations",
+    "f_spatial_overlay",
+    "f_geojson_scan",
+    "f_geodesic_sphere",
+    "f_geodesic_spheroid",
+    "f_polar_stereographic",
+    "f_krovak_transform",
+    "f_laea_transform",
+    "f_merc_3395",
+    "txt_stats",
+]
+
+
+@pytest.mark.parametrize("name", SORT_BEFORE_PROJECTION)
+def test_python_projection_runs_above_range_sort(spark, name):
+    plan = _physical_plan(QUERIES[name].fn(spark, SF_DIR))
+    assert _python_below_range_sort(plan) == [], plan
+
+
+def test_python_below_range_sort_detects_projection_under_sort(spark):
+    """The guard above is not vacuous: a kernel projected first and
+    sorted second is flagged."""
+    from pyspark.sql import functions as F
+
+    from pg_lake_spark.functions import spatial as S
+
+    xy = F.col("id").cast("double")
+    df = spark.range(8).select("id", S.st_x(S.st_point(xy, xy)).alias("x")).orderBy("id")
+    assert _python_below_range_sort(_physical_plan(df))
+
+
+def _shards(spark):
+    from pg_lake_spark.operators.sharding import assign_shards
+
+    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+    return assign_shards(docs, ["doc_id"], shard_rows=50)
+
+
+def _bm25(n_terms):
+    def build(spark):
+        from pg_lake_spark.operators.textstats import bm25_topk
+
+        docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+        terms = ["the", "data"] + [f"zz{i}" for i in range(n_terms)]
+        return bm25_topk(docs, "doc_id", "text", {"q1": terms}, k=3)
+
+    return build
+
+
+def _pq_rerank(spark):
+    from pg_lake_spark.operators.quantization import pq_encode, pq_topk, train_pq_codebooks
+
+    emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
+    books = train_pq_codebooks(emb, m=8, k=8, iters=2)
+    queries = emb.filter(F.col("vec_id") < 3)
+    return pq_topk(pq_encode(emb, books), queries, books, k=3, rerank_with=emb)
+
+
+@pytest.mark.parametrize(
+    "build, column",
+    [
+        (_shards, "__row_off"),
+        (_bm25(0), "term"),
+        (_bm25(1000), "_t"),
+        (_pq_rerank, "qvec"),
+    ],
+    ids=["shard_offsets", "bm25_query_terms", "bm25_term_frame", "pq_rerank_queries"],
+)
+def test_driver_built_relations_plan_as_local_scans(spark, build, column):
+    """Operator-internal relations built from a driver list are Arrow
+    LocalTableScans: a ``Scan ExistingRDD`` would re-run as a Python-RDD
+    job on every action and start a second Python worker daemon."""
+    plan = _physical_plan(build(spark))
+    leaves = re.findall(rf"(Scan ExistingRDD|LocalTableScan)\b[^\n]*\b{column}#", plan)
+    assert leaves and set(leaves) == {"LocalTableScan"}, plan

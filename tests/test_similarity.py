@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from pg_lake_spark.operators import similarity
@@ -240,3 +241,47 @@ def test_bucket_kernel_nan_matches_jvm_semantics(spark):
         )
     # NULL stays bucket-0 on the kernel path (the documented contract)
     assert got_kernel[4] == [0] * n_tables
+
+
+@pytest.mark.parametrize("n_blocks", [1, 2, 3, 5])
+def test_neardup_pairs_equal_numpy_all_pairs(spark, n_blocks):
+    """Every unordered block pair is generated exactly once, whatever
+    the block count: the pairs equal a numpy brute-force all-pairs
+    search over the same vectors (float32 → float64, as the operator
+    casts)."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from pg_lake_spark.operators.similarity import cosine_neardup_pairs
+
+    path = os.path.join(SF_DIR, "embeddings.parquet")
+    t = pq.read_table(path, columns=["vec_id", "embedding"])
+    ids = t.column("vec_id").to_numpy()
+    v = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
+    v /= np.linalg.norm(v, axis=1, keepdims=True)
+    sims = v @ v.T
+    thr = 0.3
+    ai, bi = np.nonzero(np.triu(sims >= thr, k=1))
+    want = {(min(ids[a], ids[b]), max(ids[a], ids[b])): sims[a, b] for a, b in zip(ai, bi)}
+
+    got = {
+        (r.id_a, r.id_b): r.cos_sim
+        for r in cosine_neardup_pairs(
+            spark.read.parquet(path), "vec_id", "embedding", threshold=thr, n_blocks=n_blocks
+        ).collect()
+    }
+    assert len(want) > 100
+    assert got.keys() == want.keys()
+    assert all(abs(got[k] - want[k]) < 1e-9 for k in want)
+
+
+def test_neardup_pairs_plan_has_no_broadcast_or_python_scan(spark):
+    """Block pairs come from a per-row explode in the JVM: no broadcast
+    join against a driver-built pair list, and no Python-RDD scan."""
+    from pg_lake_spark.queries import QUERIES
+
+    df = QUERIES["dd_embedding_neardup"].fn(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" in plan
+    assert "BroadcastExchange" not in plan
+    assert "ExistingRDD" not in plan

@@ -5,7 +5,10 @@ Usage: python tools/perf_probe.py [-n REPEATS] [query ...]
 Unlike bench.py (driver contract, .count() action), this probe times
 df.write.format("noop") — every column of every row computed, nothing
 collected (optimization guide §1.4) — and reports median/min over N
-repeats plus the job count. Pure diagnostic; never feeds artifacts.
+repeats plus the job count, the Python worker CPU per run, and the
+number of live ``pyspark.daemon`` worker pools after the row (process
+figures from lakebench/measure.py's /proc readers). Pure diagnostic;
+never feeds artifacts.
 """
 
 import argparse
@@ -14,7 +17,27 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+sys.path.insert(0, os.path.join(_ROOT, "lakebench"))
+
+import measure  # noqa: E402 — lakebench/ on the path above
+
+
+def python_daemons() -> int:
+    """Live ``pyspark.daemon`` pools: daemon processes whose parent is
+    not itself a daemon (the workers a daemon forks share its argv)."""
+    def is_daemon(pid: int) -> bool:
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                return b"pyspark.daemon" in f.read()
+        except OSError:
+            return False
+
+    kids = measure._children_map()
+    parent = {c: p for p, cs in kids.items() for c in cs}
+    daemons = {pid for pid in measure.descendants(os.getpid(), kids) if is_daemon(pid)}
+    return sum(1 for pid in daemons if parent.get(pid) not in daemons)
 
 
 def main() -> None:
@@ -59,6 +82,7 @@ def main() -> None:
         except Exception as e:
             print(f"{name}: warm failed {e}")
         samples = []
+        cpu0 = measure.cpu_sample()
         jobs0 = sc._jsc.sc().dagScheduler().nextJobId()
         for i in range(args.n):
             sc.setJobDescription(f"{name} [{i}]")
@@ -66,10 +90,12 @@ def main() -> None:
             run(fn(spark, args.sf))
             samples.append(time.perf_counter() - t0)
         jobs1 = sc._jsc.sc().dagScheduler().nextJobId()
+        py_cpu = (measure.cpu_sample() - cpu0).workers
         sc.setJobDescription(None)
         print(
             f"{name}: median {statistics.median(samples):.3f}s min {min(samples):.3f}s "
             f"max {max(samples):.3f}s jobs/run {(jobs1 - jobs0) / args.n:.1f} "
+            f"py_cpu/run {py_cpu / args.n:.2f}s py_daemons {python_daemons()} "
             f"samples {[round(s, 3) for s in samples]}"
         )
     spark.stop()
